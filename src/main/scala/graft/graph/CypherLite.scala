@@ -6724,9 +6724,10 @@ object CypherLite {
       else if (eidSegs(i))
         acc = acc.join(rangedPairs(i, acc.select(s"id$i")), s"id$i")
       else {
-        val frontier = acc.select(col(s"id$i").as("root_id")).distinct()
-        val exp = GraphOps.kHop(orientedTables(g, dirOfSeg(i)),
-            frontier, ch.rels(i)._2, relF(ch.rels(i)))
+        val seeds = acc.select(col(s"id$i").as("root_id"),
+          col(s"id$i").as("node_id")).distinct()
+        val exp = GraphOps.bfs(orientedTables(g, dirOfSeg(i)),
+            seeds, Some(ch.rels(i)._2), relF(ch.rels(i)))
           .filter(col("depth") > 0)
           .select(col("root_id").as(s"id$i"),
             col("node_id").as(s"id${i + 1}"))
@@ -7349,14 +7350,6 @@ object CypherLite {
     dm.limit.map(skipped.limit).getOrElse(skipped)
   }
 
-  /** Execute a shortestPath query: a multi-root BFS — [[GraphOps.kHop]]
-    * when the search is bounded (its min-depth dedup IS the shortest
-    * length), [[GraphOps.shortestDepths]]' anti-join fixpoint when
-    * unbounded — then one node-side join per endpoint for exactly the
-    * properties the query touches (the target join also enforces the b
-    * pattern's label/property constraints). Never a per-pair search: all
-    * (a, b) pairs resolve in one distributed traversal.
-    */
   /** The traversal-oriented edge relation of the path forms: "out" = as
     * stored, "in" = reversed (a src↔dst projection — no extra shuffle),
     * "both" = union of both orientations. Every row keeps the STORED
@@ -7392,6 +7385,13 @@ object CypherLite {
         if (dir == "in") rev else g.edges.unionByName(rev))
     }
 
+  /** Execute a shortestPath query: one multi-root [[GraphOps.bfs]],
+    * bounded or not (its min-depth dedup IS the shortest length), then
+    * one node-side join per endpoint for exactly the properties the query
+    * touches (the target join also enforces the b pattern's
+    * label/property constraints). Never a per-pair search: all (a, b)
+    * pairs resolve in one distributed traversal.
+    */
   private def runShortestPath(g: GraphTables,
       sp: ShortestPathReturn): DataFrame = {
     def pred(label: Option[String], props: Map[String, String]): Column =
@@ -7399,7 +7399,7 @@ object CypherLite {
         props.map { case (k, v) => col(k) === v })
         .reduceOption(_ && _).getOrElse(lit(true))
     val roots = g.nodes.filter(pred(sp.aLabel, sp.aProps))
-    val rootIds = roots.select(col("id").as("root_id"))
+    val seeds = roots.select(col("id").as("root_id"), col("id").as("node_id"))
     // the ALL-on-relationships quantifier pre-filters the edge relation
     // (shortest path in the subgraph of passing edges — one sargable
     // scan-side predicate before the BFS, exactly the ranged-pattern
@@ -7562,11 +7562,8 @@ object CypherLite {
         aCols.map(p => col(p).as(s"${sp.aVar}_$p")): _*), "root_id")
     } else {
       val gO = orientedTables(g, sp.dir)
-      val depths = sp.bound match {
-        case Some(k) => GraphOps.kHop(gO, rootIds, k, rel)
-          .filter(col("depth") > 0)
-        case None => GraphOps.shortestDepths(gO, rootIds, rel)
-      }
+      val depths = GraphOps.bfs(gO, seeds, sp.bound, rel)
+        .filter(col("depth") > 0)
       val withA =
         if (aCols.isEmpty) depths
         else depths.join(roots.select(col("id").as("root_id") +:

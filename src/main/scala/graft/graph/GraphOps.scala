@@ -121,156 +121,88 @@ object GraphOps {
       .select(col("src").as("from_id"), col("dst").as("to_id"))
   }
 
-  /** K-hop downward expansion (Q3/J11; `first-graph.py:141` — "up to three
-    * levels deep in the downward direction"). Downward = forward containment
-    * edges (`HAS_*`), excluding the synthetic reverse edges.
-    *
-    * Iterative frontier equi-join, k is small and fixed; each iteration is
-    * one shuffle. `localCheckpoint` would truncate lineage for large k —
-    * for k≤3 the plan stays shallow. Returns (root_id, node_id, depth) with
-    * minimal depth per reachable node.
+  /** Flush cadence for [[bfs]]'s visited set: the anti-join tolerates a
+    * visited set up to this many frontiers stale (a pair re-discovered
+    * inside the window is re-expanded at most once more before the next
+    * flush absorbs it), so the O(|visited|) materialization runs every few
+    * rounds instead of every round.
     */
-  def kHop(g: GraphTables, rootIds: DataFrame, k: Int,
-      relFilter: org.apache.spark.sql.Column = col("relType").startsWith("HAS_"))
-      : DataFrame = {
-    val edges = g.edges.filter(relFilter)
-      .select(col("src"), col("dst")).toDF()
-    var frontier = rootIds.select(col("root_id"),
-      col("root_id").as("node_id"), lit(0).as("depth"))
-    var acc = frontier
+  val VisitedCheckpointEvery: Int = 4
+
+  /** Minimum-depth BFS from many seeds at once — the one frontier kernel
+    * behind the k-hop expansion (Q3/J11; `first-graph.py:141` — "up to
+    * three levels deep in the downward direction"), unbounded closure,
+    * CypherLite's `shortestPath` and the J11 BFS twins. `seeds` holds
+    * `(root_id, node_id)` pairs: a per-root search seeds each root as its
+    * own pair; a multi-source single distance seeds every source under ONE
+    * constant `root_id`, so its state stays O(|V|), not |roots|×|V|.
+    * `relFilter` picks the edges (default: downward containment `HAS_*`,
+    * excluding the synthetic reverse edges); `maxDepth` bounds the search.
+    *
+    * Each round is one superstep: frontier ⋈ edges, deduplicated, then
+    * anti-joined against the last FLUSHED visited set, materialized with
+    * its row count as the emptiness probe — one job. The visited set
+    * flushes every [[VisitedCheckpointEvery]] rounds. Before the first
+    * flush nothing is anti-joined, so a search bounded at k ≤
+    * [[VisitedCheckpointEvery]] is a plain iterated equi-join. The last
+    * bounded hop skips materialization: the closing aggregate consumes it
+    * exactly once. A pair re-discovered inside a stale window re-enters at
+    * a LARGER depth, so the closing min-aggregate, not the anti-join, owns
+    * depth correctness.
+    *
+    * Termination when unbounded, on any graph, cycles included: visited
+    * only grows, and every frontier row is a pair outside the last flushed
+    * set. So a flush window whose first frontier is non-empty adds at
+    * least one new pair at its closing flush. Pairs are drawn from the
+    * finite set roots × nodes, so at most |roots × nodes| flushes add
+    * anything, and the frontier after the last of them anti-joins to
+    * empty within one window: at most
+    * [[VisitedCheckpointEvery]] · (|roots × nodes| + 1) rounds, ~diameter
+    * in practice.
+    *
+    * Returns `(root_id, node_id, depth)`: each reached pair once, at its
+    * minimum depth, the depth-0 seed rows included.
+    */
+  def bfs(g: GraphTables, seeds: DataFrame, maxDepth: Option[Int] = None,
+      relFilter: Column = col("relType").startsWith("HAS_")): DataFrame = {
+    val edges = g.edges.filter(relFilter).select(col("src"), col("dst")).toDF()
+    var frontier = seeds.select(col("root_id"), col("node_id"),
+      lit(0).as("depth"))
+    var visited = Option.empty[DataFrame] // none before the first flush
+    var pending = Vector(frontier) // rows found since the last flush
     var depth = 0
-    var exhausted = false
-    while (depth < k && !exhausted) {
+    var done = maxDepth.exists(_ <= 0)
+    while (!done) {
       depth += 1
       // using-column join (not dataset-qualified columns): the frontier's
       // lineage already contains the edge attributes, and qualified refs
       // would trip Spark's ambiguous-self-join detection
-      val expanded = frontier.select(col("root_id"), col("node_id").as("src"))
+      val hop = frontier.select(col("root_id"), col("node_id").as("src"))
         .join(edges, Seq("src"))
         .select(col("root_id"), col("dst").as("node_id"),
           lit(depth).as("depth"))
         .distinct()
-      if (depth < k) {
-        // materialization truncates the per-iteration plan/lineage growth
-        // (SURVEY.md §4.3); the count that materializes it IS the
-        // emptiness probe — one job, not two. The FINAL hop skips it —
-        // its result is consumed exactly once by the closing aggregate,
-        // so the checkpoint job would be pure overhead.
-        val (f, n) = materializeCount(expanded)
-        frontier = f
-        exhausted = n == 0
-        if (!exhausted) acc = acc.unionByName(frontier)
+      val fresh = visited.fold(hop)(v => hop.join(
+        v.select("root_id", "node_id"), Seq("root_id", "node_id"), "left_anti"))
+      if (maxDepth.contains(depth)) {
+        pending :+= fresh
+        done = true
       } else {
-        acc = acc.unionByName(expanded)
+        val (f, n) = materializeCount(fresh)
+        frontier = f
+        done = n == 0
+        if (!done) {
+          pending :+= f
+          if (depth % VisitedCheckpointEvery == 0) {
+            visited = Some((visited.toVector ++ pending)
+              .reduce(_ unionByName _).localCheckpoint())
+            pending = Vector.empty
+          }
+        }
       }
     }
-    acc.groupBy("root_id", "node_id").agg(min("depth").as("depth"))
-  }
-
-  /** Flush cadence for [[reachable]]'s visited-set checkpoint: the anti-join
-    * tolerates a visited set up to this many frontiers stale (a node
-    * re-discovered inside the window is re-expanded at most once before the
-    * next flush absorbs it), so the O(|visited|) materialization runs every
-    * few iterations instead of every iteration.
-    */
-  val VisitedCheckpointEvery: Int = 4
-
-  /** Unbounded reachability (transitive closure from roots), safe on CYCLIC
-    * graphs: each iteration expands only the nodes not already visited
-    * (anti-join against the accumulated set), so the loop reaches a
-    * fixpoint in ~diameter iterations regardless of cycles.
-    * `maxIterations` is a backstop, not the termination mechanism.
-    *
-    * Only the (small) frontier is checkpointed per iteration; the
-    * accumulated visited set — O(|V|) and the dominant materialization cost
-    * on a deep graph — is re-checkpointed only every
-    * [[VisitedCheckpointEvery]] iterations, with discovered frontiers
-    * buffered in between. Staleness is benign: the anti-join against the
-    * last flushed set can only keep MORE rows (possible re-visits inside
-    * the window), never drop one, and the flush dedupes with `distinct`.
-    */
-  def reachable(g: GraphTables, rootIds: DataFrame,
-      relFilter: org.apache.spark.sql.Column =
-        col("relType").startsWith("HAS_"),
-      maxIterations: Int = 64): DataFrame = {
-    val edges = g.edges.filter(relFilter).select(col("src"), col("dst")).toDF()
-    var visited = rootIds.select(col("root_id"),
-      col("root_id").as("node_id")).localCheckpoint()
-    var frontier = visited
-    var pending = List.empty[DataFrame]
-    def flush(): Unit = if (pending.nonEmpty) {
-      visited = pending.foldLeft(visited)(_ unionByName _)
-        .distinct().localCheckpoint()
-      pending = Nil
-    }
-    var depth = 0
-    var done = false
-    while (depth < maxIterations && !done) {
-      depth += 1
-      val (f, n) = materializeCount(
-        frontier.select(col("root_id"), col("node_id").as("src"))
-          .join(edges, Seq("src"))
-          .select(col("root_id"), col("dst").as("node_id"))
-          .distinct()
-          .join(visited, Seq("root_id", "node_id"), "left_anti"))
-      frontier = f
-      done = n == 0
-      if (!done) {
-        pending ::= frontier
-        if (pending.size >= VisitedCheckpointEvery) flush()
-      }
-    }
-    flush()
-    visited
-  }
-
-  /** Exact minimum-depth BFS from many roots simultaneously — the
-    * shortestPath kernel behind CypherLite's `MATCH p = shortestPath(…)`
-    * (the reference serves that form through Neo4j, `first-graph.py:29-36`).
-    * Same anti-join fixpoint as [[reachable]] (cycle-safe, ~diameter
-    * rounds, only the frontier materialized per round), but each pair
-    * keeps its discovery depth. The visited set flushes on the
-    * [[VisitedCheckpointEvery]] cadence; a pair re-discovered inside the
-    * stale window re-enters at a LARGER depth, so the closing
-    * min-aggregate — not the anti-join — owns depth correctness, exactly
-    * as [[kHop]]'s does. A root's path back to itself around a cycle is
-    * excluded (the pair dedupes to its depth-0 self-row, dropped last).
-    */
-  def shortestDepths(g: GraphTables, rootIds: DataFrame,
-      relFilter: org.apache.spark.sql.Column =
-        col("relType").startsWith("HAS_"),
-      maxIterations: Int = 64): DataFrame = {
-    val edges = g.edges.filter(relFilter).select(col("src"), col("dst")).toDF()
-    var visited = rootIds.select(col("root_id"),
-      col("root_id").as("node_id"), lit(0).as("depth")).localCheckpoint()
-    var frontier = visited
-    var pending = List.empty[DataFrame]
-    def flush(): Unit = if (pending.nonEmpty) {
-      visited = pending.foldLeft(visited)(_ unionByName _).localCheckpoint()
-      pending = Nil
-    }
-    var depth = 0
-    var done = false
-    while (depth < maxIterations && !done) {
-      depth += 1
-      val (f, n) = materializeCount(
-        frontier.select(col("root_id"), col("node_id").as("src"))
-          .join(edges, Seq("src"))
-          .select(col("root_id"), col("dst").as("node_id"))
-          .distinct()
-          .join(visited.select("root_id", "node_id"),
-            Seq("root_id", "node_id"), "left_anti")
-          .select(col("root_id"), col("node_id"), lit(depth).as("depth")))
-      frontier = f
-      done = n == 0
-      if (!done) {
-        pending ::= frontier
-        if (pending.size >= VisitedCheckpointEvery) flush()
-      }
-    }
-    flush()
-    visited.groupBy("root_id", "node_id").agg(min("depth").as("depth"))
-      .filter(col("depth") > 0)
+    (visited.toVector ++ pending).reduce(_ unionByName _)
+      .groupBy("root_id", "node_id").agg(min("depth").as("depth"))
   }
 
   /** Matched node + its ≤k-hop downward neighborhood as (m, connected) rows
@@ -301,8 +233,9 @@ object GraphOps {
       pred: org.apache.spark.sql.Column, k: Int,
       relFilter: org.apache.spark.sql.Column =
         col("relType").startsWith("HAS_")): DataFrame = {
-    val roots = g.nodes.filter(pred).select(col("id").as("root_id"))
-    val hops = kHop(g, roots, k, relFilter).filter(col("depth") > 0)
+    val seeds = g.nodes.filter(pred)
+      .select(col("id").as("root_id"), col("id").as("node_id"))
+    val hops = bfs(g, seeds, Some(k), relFilter).filter(col("depth") > 0)
     val rootNodes = g.nodes.select(col("id").as("root_id"),
       col("name").as("root_name"))
     val connected = g.nodes.select(col("id").as("node_id"),
@@ -321,7 +254,7 @@ object GraphOps {
     * never materializing (root, reachable) pairs: an existence check
     * needs set membership, not the pair expansion, so the shuffle is
     * O(|V|) per level instead of O(paths) (guide §2.3 — shuffle keys,
-    * not payloads; r17: this replaced a kHop pair expansion that carried
+    * not payloads; r17: this replaced a k-hop pair expansion that carried
     * every root×descendant combination only to be distinct-ed away).
     */
   def reachesWithin(g: GraphTables, k: Int,
@@ -361,8 +294,9 @@ object GraphOps {
     */
   def subtreeText(g: GraphTables, label: String, name: String,
       k: Int = Int.MaxValue >> 1): DataFrame = {
-    val roots = matchNodes(g, label, name).select(col("id").as("root_id"))
-    val hops = kHop(g, roots, math.min(k, 32))
+    val seeds = matchNodes(g, label, name)
+      .select(col("id").as("root_id"), col("id").as("node_id"))
+    val hops = bfs(g, seeds, Some(math.min(k, 32)))
     val withText = hops
       .join(g.nodes.select(col("id").as("node_id"), col("content"),
         col("path"), col("docnbr")), "node_id")
@@ -667,7 +601,7 @@ object GraphOps {
     * (source, node) — shuffle-partitioned, nothing collected:
     *  - FORWARD: multi-source BFS layering with exact path counts σ —
     *    frontier ⋈ edges, anti-join the visited set, σ = Σ predecessor σ
-    *    (the kCore/reachable anti-join fixpoint discipline, lineage cut
+    *    (the kCore/[[bfs]] anti-join fixpoint discipline, lineage cut
     *    per round).
     *  - BACKWARD: dependency accumulation per descending depth level —
     *    δ(v) = Σ_{w ∈ succ(v), depth(w)=depth(v)+1} σ(v)/σ(w)·(1+δ(w)).
@@ -768,6 +702,46 @@ object GraphOps {
           .as("betweenness"))
   }
 
+  /** Undirected degree `(id, deg)` of canonical edges `und` (lo, hi). */
+  private def degreesOf(und: DataFrame): DataFrame =
+    und.select(col("lo").as("id"))
+      .unionAll(und.select(col("hi").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("deg"))
+
+  /** Degree-ordered triangle enumeration over canonical undirected edges
+    * `und` (lo < hi) with their endpoint degrees `deg` — the wedge/closure
+    * core [[clusteringCoefficient]] and each [[kTruss]] round share. Every
+    * edge is directed from its lower-(deg, id) endpoint to the higher,
+    * wedges fan out only along out-edges, and each triangle is found
+    * exactly once at its lowest-degree corner, as `(a, b, c)`.
+    */
+  private def triangles(und: DataFrame, deg: DataFrame): DataFrame = {
+    // orient each edge from the lower-(deg, id) endpoint to the higher:
+    // the orientation key is a single sortable struct comparison
+    val withDeg = und
+      .join(deg.select(col("id").as("lo"), col("deg").as("dlo")), "lo")
+      .join(deg.select(col("id").as("hi"), col("deg").as("dhi")), "hi")
+    val kLo = struct(col("dlo").as("d"), col("lo").as("n"))
+    val kHi = struct(col("dhi").as("d"), col("hi").as("n"))
+    val oriented = withDeg.select(
+        when(kLo < kHi,
+          struct(col("lo").as("u"), col("hi").as("v"), kHi.as("vk")))
+          .otherwise(
+            struct(col("hi").as("u"), col("lo").as("v"), kLo.as("vk")))
+          .as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.vk").as("vk"))
+      .localCheckpoint() // wedge join (×2) + closure semi-join
+    // wedges (a; b, c) along a's OUT-edges only, b before c in the same
+    // (deg, id) order — the closing edge is then oriented b→c exactly
+    val ab = oriented.select(col("u").as("a"), col("v").as("b"),
+      col("vk").as("bk"))
+    val ac = oriented.select(col("u").as("a"), col("v").as("c"),
+      col("vk").as("ck"))
+    ab.join(ac, "a").filter(col("bk") < col("ck"))
+      .join(oriented.select(col("u").as("b"), col("v").as("c")),
+        Seq("b", "c"), "left_semi")
+  }
+
   /** Local clustering coefficient: per node, the fraction of its distinct
     * undirected neighbor pairs that are themselves connected —
     * 2·T(v) / (deg(v)·(deg(v)−1)), 0 for deg < 2. Edge direction,
@@ -794,35 +768,9 @@ object GraphOps {
         greatest(col("src"), col("dst")).as("hi"))
       .distinct()
       .localCheckpoint() // orientation join (×2), degrees, node join
-    val deg = und.select(col("lo").as("id"))
-      .unionAll(und.select(col("hi").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = degreesOf(und)
       .localCheckpoint() // orientation (×2 endpoints) + the final output
-    // orient each edge from the lower-(deg, id) endpoint to the higher:
-    // the orientation key is a single sortable struct comparison
-    val withDeg = und
-      .join(deg.select(col("id").as("lo"), col("deg").as("dlo")), "lo")
-      .join(deg.select(col("id").as("hi"), col("deg").as("dhi")), "hi")
-    val kLo = struct(col("dlo").as("d"), col("lo").as("n"))
-    val kHi = struct(col("dhi").as("d"), col("hi").as("n"))
-    val oriented = withDeg.select(
-        when(kLo < kHi,
-          struct(col("lo").as("u"), col("hi").as("v"), kHi.as("vk")))
-          .otherwise(
-            struct(col("hi").as("u"), col("lo").as("v"), kLo.as("vk")))
-          .as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.vk").as("vk"))
-      .localCheckpoint() // wedge join (×2) + closure semi-join
-    // wedges (a; b, c) along a's OUT-edges only, b before c in the same
-    // (deg, id) order — the closing edge is then oriented b→c exactly
-    val ab = oriented.select(col("u").as("a"), col("v").as("b"),
-      col("vk").as("bk"))
-    val ac = oriented.select(col("u").as("a"), col("v").as("c"),
-      col("vk").as("ck"))
-    val tri = ab.join(ac, "a").filter(col("bk") < col("ck"))
-      .join(oriented.select(col("u").as("b"), col("v").as("c")),
-        Seq("b", "c"), "left_semi")
-    val perNode = tri
+    val perNode = triangles(und, deg)
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("triangles"))
     g.nodes.toDF()
@@ -1468,28 +1416,6 @@ object GraphOps {
       maxIterations)
   }
 
-  /** Unbounded BFS depth from roots via Pregel (J11 unbounded form) —
-    * message = candidate depth, merge = min; `maxIterations` bounds run.
-    */
-  def bfsDepths(spark: SparkSession, g: GraphTables, rootIds: Set[Long],
-      maxIterations: Int = 20): DataFrame = {
-    import spark.implicits._
-    val gx = toGraphX(g)
-      .subgraph(epred = e => e.attr.startsWith("HAS_"))
-      .mapVertices((id, _) =>
-        if (rootIds.contains(id)) 0.0 else Double.PositiveInfinity)
-    val res = gx.pregel(Double.PositiveInfinity, maxIterations)(
-      (_, attr, msg) => math.min(attr, msg),
-      triplet =>
-        if (triplet.srcAttr + 1 < triplet.dstAttr)
-          Iterator((triplet.dstId, triplet.srcAttr + 1))
-        else Iterator.empty,
-      (a, b) => math.min(a, b))
-    res.vertices.filter(_._2 < Double.PositiveInfinity)
-      .map { case (id, d) => (id, d.toInt) }
-      .toDF("id", "depth")
-  }
-
   /** Deterministic random-walk corpus over the out-edge relation — the
     * corpus-generation step of graph-embedding training (DeepWalk,
     * Perozzi et al. KDD 2014; node2vec's p=q=1 case): `walksPerRoot`
@@ -1827,8 +1753,8 @@ object GraphOps {
     * Throws if `maxIterations` rounds exhaust BEFORE the peeling fixpoint:
     * the remainder would be a superset still containing sub-k nodes, and a
     * caller cannot tell that truncated answer from a true k-core — fail
-    * loudly instead (mirroring how [[reachable]] treats its backstop; the
-    * default bound far exceeds any real peeling depth).
+    * loudly instead (the default bound far exceeds any real peeling
+    * depth).
     */
   def kCore(spark: SparkSession, g: GraphTables, k: Int,
       maxIterations: Int = 64): DataFrame =
@@ -1982,32 +1908,8 @@ object GraphOps {
     var round = 0
     var done = n == 0L
     while (!done && round < maxIterations) {
-      val deg = und.select(col("lo").as("id"))
-        .unionAll(und.select(col("hi").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-      val withDeg = und
-        .join(deg.select(col("id").as("lo"), col("deg").as("dlo")), "lo")
-        .join(deg.select(col("id").as("hi"), col("deg").as("dhi")), "hi")
-      val kLo = struct(col("dlo").as("d"), col("lo").as("n"))
-      val kHi = struct(col("dhi").as("d"), col("hi").as("n"))
-      val oriented = withDeg.select(
-          when(kLo < kHi,
-            struct(col("lo").as("u"), col("hi").as("v"), kHi.as("vk")))
-            .otherwise(
-              struct(col("hi").as("u"), col("lo").as("v"), kLo.as("vk")))
-            .as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"),
-          col("e.vk").as("vk"))
-        .localCheckpoint() // wedge join (×2) + closure semi-join
-      val ab = oriented.select(col("u").as("a"), col("v").as("b"),
-        col("vk").as("bk"))
-      val ac = oriented.select(col("u").as("a"), col("v").as("c"),
-        col("vk").as("ck"))
-      val tri = ab.join(ac, "a").filter(col("bk") < col("ck"))
-        .join(oriented.select(col("u").as("b"), col("v").as("c")),
-          Seq("b", "c"), "left_semi")
       // each triangle supports its three edges, canonicalized (lo, hi)
-      val support = tri.select(explode(array(
+      val support = triangles(und, degreesOf(und)).select(explode(array(
           struct(least(col("a"), col("b")).as("lo"),
             greatest(col("a"), col("b")).as("hi")),
           struct(least(col("a"), col("c")).as("lo"),

@@ -174,12 +174,7 @@ object GraphQueries {
       // graph under any slicing
       env.withColumn("slice", sliceKey).coalesce(4)
         .write.partitionBy("slice").parquet(s"$dir/env")
-      val nEnvFiles = {
-        val st = java.nio.file.Files.walk(
-          java.nio.file.Paths.get(s"$dir/env"))
-        try st.filter(p => p.toString.endsWith(".parquet")).count().toInt
-        finally st.close()
-      }
+      val nEnvFiles = StreamingGraphIngest.parquetFileCount(s, s"$dir/env")
       StreamingGraphIngest.drainIngest(s, s"$dir/env", s"$dir/store",
         s"$dir/ckpt", maxFilesPerTrigger = Some((nEnvFiles + 1) / 2))
       GraphStore.load(s, s"$dir/store").nodes.groupBy("label")
@@ -279,9 +274,9 @@ object GraphQueries {
     },
     QueryDef.rowsOnly("graph_pregel_bfs") { (s, _) =>
       val g = graph(s)
-      val roots = g.nodes.filter(col("label") === "Boeing_Service_Bulletin")
-        .select("id").collect().map(_.getLong(0)).toSet
-      GraphOps.bfsDepths(s, g, roots)
+      val seeds = g.nodes.filter(col("label") === "Boeing_Service_Bulletin")
+        .select(lit(0L).as("root_id"), col("id").as("node_id"))
+      GraphOps.bfs(g, seeds)
         .groupBy("depth").agg(count(lit(1)).as("n_nodes")).orderBy("depth")
     }
   )

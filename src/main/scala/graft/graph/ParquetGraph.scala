@@ -482,11 +482,11 @@ object ParquetGraph {
         |  JOIN customer ON c_nationkey = n_nationkey GROUP BY r_name)
         |ORDER BY root_name, depth""".stripMargin) { (s, d) =>
       val g = hierarchy(s, d)
-      val roots = g.nodes.filter(col("label") === "Region")
-        .select(col("id").as("root_id"))
+      val seeds = g.nodes.filter(col("label") === "Region")
+        .select(col("id").as("root_id"), col("id").as("node_id"))
       val rootNames = g.nodes.filter(col("label") === "Region")
         .select(col("id").as("root_id"), col("name").as("root_name"))
-      GraphOps.kHop(g, roots, 2)
+      GraphOps.bfs(g, seeds, Some(2))
         .join(rootNames, "root_id")
         .groupBy("root_name", "depth")
         .agg(count(lit(1)).as("n_nodes"))
@@ -501,8 +501,9 @@ object ParquetGraph {
         |FROM nation a JOIN nation b ON a.n_regionkey = b.n_regionkey
         |GROUP BY a.n_name ORDER BY root_name""".stripMargin) { (s, d) =>
       val g = chain(s, d)
-      val roots = g.nodes.select(col("id").as("root_id"))
-      GraphOps.reachable(g, roots, col("relType") === "HAS_NEXT")
+      val seeds =
+        g.nodes.select(col("id").as("root_id"), col("id").as("node_id"))
+      GraphOps.bfs(g, seeds, relFilter = col("relType") === "HAS_NEXT")
         .groupBy("root_id").agg(count(lit(1)).as("n_reachable"))
         .join(nationNames(s, d).withColumnRenamed("id", "root_id"), "root_id")
         .select(col("n_name").as("root_name"), col("n_reachable"))
@@ -532,11 +533,12 @@ object ParquetGraph {
         |    ORDER BY n_nationkey) - 1 AS INT) AS depth
         |FROM nation ORDER BY name""".stripMargin) { (s, d) =>
       val g = chain(s, d)
-      val rootIds = Tables.nation(s, d)
+      // one constant root over every source: a single min-depth per node
+      val seeds = Tables.nation(s, d)
         .groupBy("n_regionkey").agg(min("n_nationkey").as("k"))
-        .select((col("k") + NationBase).as("id"))
-        .collect().map(_.getLong(0)).toSet // ≤ |regions| rows — bounded
-      GraphOps.bfsDepths(s, g, rootIds)
+        .select(lit(0L).as("root_id"), (col("k") + NationBase).as("node_id"))
+      GraphOps.bfs(g, seeds)
+        .select(col("node_id").as("id"), col("depth"))
         .join(nationNames(s, d), "id")
         .select(col("n_name").as("name"), col("depth"))
         .orderBy("name")
@@ -1377,12 +1379,7 @@ object ParquetGraph {
       // written, so the two-batch split holds under ANY partition layout.
       env.withColumn("slice", sliceKey).coalesce(16)
         .write.partitionBy("slice").parquet(s"$dir/env")
-      val nEnvFiles = {
-        val st = java.nio.file.Files.walk(
-          java.nio.file.Paths.get(s"$dir/env"))
-        try st.filter(p => p.toString.endsWith(".parquet")).count().toInt
-        finally st.close()
-      }
+      val nEnvFiles = StreamingGraphIngest.parquetFileCount(s, s"$dir/env")
       StreamingGraphIngest.drainIngest(s, s"$dir/env", s"$dir/store",
         s"$dir/ckpt", maxFilesPerTrigger = Some((nEnvFiles + 1) / 2))
       val g = GraphStore.load(s, s"$dir/store")

@@ -145,6 +145,22 @@ object StreamingGraphIngest {
       }
       .start()
 
+  /** Number of `.parquet` files under `dir`, recursively — what a
+    * `maxFilesPerTrigger` split of an envelope written there is sized
+    * from. Listed through Hadoop's FileSystem with the session's Hadoop
+    * conf, so the envelope may live on HDFS, S3 or local disk alike.
+    */
+  private[graph] def parquetFileCount(spark: SparkSession, dir: String)
+      : Int = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val files = path.getFileSystem(spark.sessionState.newHadoopConf())
+      .listFiles(path, true)
+    var n = 0
+    while (files.hasNext)
+      if (files.next().getPath.getName.endsWith(".parquet")) n += 1
+    n
+  }
+
   /** Incremental catch-up form (`Trigger.AvailableNow`, the scheduled-job
     * shape): drain every envelope file not yet processed by this
     * checkpoint into the store, then return. Each invocation picks up

@@ -34,21 +34,38 @@ class JobCountSpec extends SparkSpec {
   test("reachable() fixpoint stays within its job budget") {
     // pre-build the cached fixture OUTSIDE the measured group
     val g = graph.ParquetGraph.chain(spark, dir)
-    val roots = g.nodes.select(col("id").as("root_id"))
-    // nation is 5 regions × 5-cycles: the fixpoint needs 5 expansion
-    // iterations (the 5th returns to the roots and anti-joins to empty).
-    // Measured shape (AQE off): ~2 jobs per eager localCheckpoint (init,
-    // one per iteration, one per visited flush), 1 per isEmpty probe
-    // (2-3 on the final EMPTY probe — take(1) escalates through empty
-    // partitions), 1 final count ⇒ 22. Budget 25 gives a little slack but
-    // fails a revert to checkpointing visited EVERY iteration (+2 jobs ×4
-    // extra flushes +4 extra probes ≈ 34) — the regression this pins.
+    val seeds = g.nodes.select(col("id").as("root_id"), col("id").as("node_id"))
+    // nation is 5 regions × 5-cycles: the unbounded bfs needs 5 expansion
+    // rounds (the 5th returns to the roots and anti-joins to empty).
+    // The count that materializes each frontier IS its emptiness probe,
+    // and visited flushes once, after round 4. Measured (AQE off): 12
+    // jobs. The budget of 25 fails a revert to checkpointing visited
+    // EVERY round plus a separate emptiness probe per round.
     val ((rows), jobs) = jobsDuring("reachable-budget") {
-      graph.GraphOps.reachable(g, roots,
-        col("relType") === "HAS_NEXT").count()
+      graph.GraphOps.bfs(g, seeds,
+        relFilter = col("relType") === "HAS_NEXT").count()
     }
+    info(s"unbounded bfs: $jobs jobs")
     assert(rows == 125, s"every nation reaches its whole 5-cycle: $rows")
     assert(jobs <= 25, s"reachable issued $jobs jobs (budget 25)")
+  }
+
+  test("bounded bfs (k = 3) keeps the k-hop job count") {
+    // pre-build the cached fixture OUTSIDE the measured group
+    val g = graph.ParquetGraph.hierarchy(spark, dir)
+    val seeds = g.nodes.filter(col("label") === "Region")
+      .select(col("id").as("root_id"), col("id").as("node_id"))
+    // region → nation → customer → order: hops 1 and 2 materialize with
+    // their count as the emptiness probe, hop 3 (the last) is consumed
+    // once by the closing aggregate, and k ≤ VisitedCheckpointEvery means
+    // no visited flush and no anti-join. Measured (AQE off): 6 jobs with
+    // the caller's count; any extra eager action per hop breaks the pin.
+    val (rows, jobs) = jobsDuring("bounded-bfs-budget") {
+      graph.GraphOps.bfs(g, seeds, Some(3)).count()
+    }
+    info(s"bounded bfs: $jobs jobs")
+    assert(rows == 1680, s"regions reach every order in 3 hops: $rows")
+    assert(jobs <= 6, s"bounded bfs issued $jobs jobs (budget 6)")
   }
 
   test("cheap registered queries execute without stray driver actions") {

@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.SparkSpec
+import org.apache.spark.graft.TestMetrics
 
 /** Relationship isomorphism ACROSS ranged chain segments (round-14
   * directive 1). On a cyclic graph a mixed chain like
@@ -93,32 +94,6 @@ class ChainIsoSpec extends SparkSpec {
   private def node(id: Long, nm: String): NodeRow =
     NodeRow(id, "N", nm, "", "", "b1", Seq.empty)
 
-  private def shuffleBytes(action: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) acc.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      action
-      // the listener bus drains asynchronously — poll until quiescent
-      var prev = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 8000) {
-        Thread.sleep(100)
-        waited += 100
-        val cur = acc.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      acc.get()
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   // layered fan a01..a40 -[R]-> x1..x3 -[R]-> m01..m10 -[R]->
   // n01..n10 -[R]-> t: 120 single-hop bindings SHARE three x-nodes
   // whose *1..3 walks enumerate 10 + 100 + 100 = 210 witness paths
@@ -166,9 +141,13 @@ class ChainIsoSpec extends SparkSpec {
     // byte A/B (contention-immune — bytes, not wall): per-path ships
     // 300 witness rows per x into the chain join and the post-join
     // binding dedup, the collapse one row per (from, to) pair
-    val bCollapse = shuffleBytes { run() }
+    val bCollapse = TestMetrics.shuffleBytes(spark.sparkContext) {
+      run()
+    }._1
     val bPerPath = CypherLite.disableUnavoidableCollapse.withValue(true) {
-      shuffleBytes { run() }
+      TestMetrics.shuffleBytes(spark.sparkContext) {
+        run()
+      }._1
     }
     info(f"collapse=$bCollapse%,d bytes  per-path=$bPerPath%,d bytes  " +
       f"ratio=${bPerPath.toDouble / math.max(bCollapse, 1)}%.2f")
@@ -198,8 +177,12 @@ class ChainIsoSpec extends SparkSpec {
       CypherLite.run(g, q).fold(e => fail(s"$q → $e"), identity).collect()
     val (small, big) = (fan2(10), fan2(40))
     run(small); run(big) // warm both plans
-    val bSmall = shuffleBytes { run(small) }
-    val bBig = shuffleBytes { run(big) }
+    val bSmall = TestMetrics.shuffleBytes(spark.sparkContext) {
+      run(small)
+    }._1
+    val bBig = TestMetrics.shuffleBytes(spark.sparkContext) {
+      run(big)
+    }._1
     info(f"mid=10: $bSmall%,d bytes  mid=40: $bBig%,d bytes  " +
       f"ratio=${bBig.toDouble / math.max(bSmall, 1)}%.2f")
     assert(bBig <= 6 * bSmall,

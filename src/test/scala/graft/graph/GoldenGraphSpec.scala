@@ -98,23 +98,23 @@ class GoldenGraphSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
       .map { case (s, d) => EdgeRow(s, d, "HAS_X", "d", "b") }.toDS()
     val cyclic = GraphTables(nodes, edges)
-    val roots = Seq(1L).toDF("root_id")
-    val closure = GraphOps.reachable(cyclic, roots)
+    val seeds = Seq((1L, 1L)).toDF("root_id", "node_id")
+    val closure = GraphOps.bfs(cyclic, seeds)
       .select("node_id").collect().map(_.getLong(0)).toSet
     assert(closure == Set(1L, 2L, 3L, 4L))
-    // and on the real corpus it agrees with deep kHop
-    val sbRoots = g.nodes.filter(col("label") === "Boeing_Service_Bulletin")
-      .select(col("id").as("root_id"))
-    val viaKhop = GraphOps.kHop(g, sbRoots, 32).select("root_id", "node_id")
-    val viaReach = GraphOps.reachable(g, sbRoots)
+    // and on the real corpus it agrees with a deep bounded search
+    val sbSeeds = g.nodes.filter(col("label") === "Boeing_Service_Bulletin")
+      .select(col("id").as("root_id"), col("id").as("node_id"))
+    val viaKhop = GraphOps.bfs(g, sbSeeds, Some(32))
+    val viaReach = GraphOps.bfs(g, sbSeeds)
     assert(viaReach.count() == viaKhop.count())
   }
 
   test("kHop depths are monotone: kHop(k) ⊆ kHop(k+1)") {
-    val roots = g.nodes.filter(col("label") === "Boeing_Service_Bulletin")
-      .select(col("id").as("root_id"))
-    val k2 = GraphOps.kHop(g, roots, 2).select("root_id", "node_id")
-    val k3 = GraphOps.kHop(g, roots, 3).select("root_id", "node_id")
+    val seeds = g.nodes.filter(col("label") === "Boeing_Service_Bulletin")
+      .select(col("id").as("root_id"), col("id").as("node_id"))
+    val k2 = GraphOps.bfs(g, seeds, Some(2)).select("root_id", "node_id")
+    val k3 = GraphOps.bfs(g, seeds, Some(3)).select("root_id", "node_id")
     assert(k2.except(k3).count() == 0)
     assert(k3.count() > k2.count())
   }
@@ -139,9 +139,9 @@ class GoldenGraphSpec extends SparkSpec {
     assert(cc == 1)
     val pr = GraphOps.pageRank(spark, g, 5)
     assert(pr.count() == g.nodes.count())
-    val roots = g.nodes.filter(col("label") === "Boeing_Service_Bulletin")
-      .select("id").collect().map(_.getLong(0)).toSet
-    val bfs = GraphOps.bfsDepths(spark, g, roots)
+    val seeds = g.nodes.filter(col("label") === "Boeing_Service_Bulletin")
+      .select(lit(0L).as("root_id"), col("id").as("node_id"))
+    val bfs = GraphOps.bfs(g, seeds)
     assert(bfs.agg(max("depth")).collect().head.getInt(0) >= 3)
   }
 

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Hub-skew stress: the frontier joins inside [[GraphOps.kHop]] and
-  * [[GraphOps.reachable]] must stay task-balanced when the graph has a
+/** Hub-skew stress: the frontier joins inside [[GraphOps.bfs]], bounded
+  * and unbounded, must stay task-balanced when the graph has a
   * high-degree hub. The reference's ingest shares one `LineNumber` node
   * across every document (`xml2neo.py:93-96`), so real corpora are
   * GUARANTEED to contain such a key; at cluster scale an unsplit hub
@@ -51,11 +51,12 @@ class HubSkewSpec extends SparkSpec {
     GraphTables(spark.emptyDataset[NodeRow], edges)
   }
 
-  private def hubRoot: DataFrame = Seq(0L).toDF("root_id")
+  private def hubRoot: DataFrame = Seq((0L, 0L)).toDF("root_id", "node_id")
 
   // all 2.2M edges hang off the hub within two hops: depth 1 is the hub's
   // fan-out, depth 2 is every background edge (their sources are all depth-1
-  // nodes); background targets have no out-edges, so reachable == kHop(2)
+  // nodes); background targets have no out-edges, so the unbounded search
+  // reaches exactly what the 2-hop one does
   private lazy val expectedNodes: Long = {
     val bgDistinctDsts = graph.edges.toDF()
       .filter(col("src") > 0L).select("dst").distinct().count()
@@ -64,9 +65,9 @@ class HubSkewSpec extends SparkSpec {
 
   test("kHop through a 2.2M-edge hub graph: AQE splits the hub partition") {
     val (rows, on) = measure(spark, skewOn = true) {
-      GraphOps.kHop(graph, hubRoot, 2).count()
+      GraphOps.bfs(graph, hubRoot, Some(2)).count()
     }
-    assert(rows == expectedNodes, "kHop node count vs direct aggregation")
+    assert(rows == expectedNodes, "2-hop node count vs direct aggregation")
     info(s"skew-ON heavy stages (bytes): ${on.map(_.render).mkString("; ")}")
     on.foreach { st =>
       assert(st.ratio <= BalancedRatio,
@@ -74,7 +75,7 @@ class HubSkewSpec extends SparkSpec {
     }
 
     val (_, off) = measure(spark, skewOn = false) {
-      GraphOps.kHop(graph, hubRoot, 2).count()
+      GraphOps.bfs(graph, hubRoot, Some(2)).count()
     }
     info(s"skew-OFF heavy stages (bytes): ${off.map(_.render).mkString("; ")}")
     assert(off.exists(_.ratio > BalancedRatio),
@@ -84,9 +85,9 @@ class HubSkewSpec extends SparkSpec {
 
   test("reachable fixpoint through the hub graph stays balanced") {
     val (rows, on) = measure(spark, skewOn = true) {
-      GraphOps.reachable(graph, hubRoot).count()
+      GraphOps.bfs(graph, hubRoot).count()
     }
-    assert(rows == expectedNodes, "reachable node count vs direct aggregation")
+    assert(rows == expectedNodes, "closure node count vs direct aggregation")
     info(s"skew-ON heavy stages (bytes): ${on.map(_.render).mkString("; ")}")
     on.foreach { st =>
       assert(st.ratio <= BalancedRatio,

@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.graft.TestMetrics
 
 /** Single-`shortestPath` reconstruction via BFS parent frontier
   * (round-14 directive 2, clearing r13's one perf_weak item). Pins:
@@ -52,31 +52,6 @@ class ShortestBfsSpec extends SparkSpec {
   private def run(g: GraphTables, q: String) =
     CypherLite.run(g, q).fold(e => fail(s"$q → $e"), identity)
 
-  private def shuffleBytes(action: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val l = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) acc.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      action
-      // the listener bus drains asynchronously — poll until quiescent
-      var prev = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 5000) {
-        Thread.sleep(100)
-        waited += 100
-        val cur = acc.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      acc.get()
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("tie-break: the lexicographically smallest trail wins among " +
       "equal-length paths, deterministically") {
     val r = run(diamond,
@@ -121,8 +96,12 @@ class ShortestBfsSpec extends SparkSpec {
     // warm both plans once so neither run pays first-touch costs
     run(hub, q("shortestPath")).collect()
     run(hub, q("allShortestPaths")).collect()
-    val bfs = shuffleBytes { run(hub, q("shortestPath")).collect() }
-    val enum0 = shuffleBytes { run(hub, q("allShortestPaths")).collect() }
+    val bfs = TestMetrics.shuffleBytes(spark.sparkContext) {
+      run(hub, q("shortestPath")).collect()
+    }._1
+    val enum0 = TestMetrics.shuffleBytes(spark.sparkContext) {
+      run(hub, q("allShortestPaths")).collect()
+    }._1
     info(f"bfs=$bfs%,d bytes  enumeration=$enum0%,d bytes  " +
       f"ratio=${enum0.toDouble / math.max(bfs, 1)}%.1f")
     // the bag materializes 900 trails where the BFS carries ≤ one row
@@ -131,5 +110,22 @@ class ShortestBfsSpec extends SparkSpec {
     assert(bfs * 2 <= enum0,
       s"BFS=$bfs enumeration=$enum0 — reconstruction is paying the " +
         "bag price")
+  }
+
+  test("unbounded multi-source bfs returns every depth down a 25-hop " +
+      "chain: no round cap truncates it") {
+    import spark.implicits._
+    // directed chain 0 → 1 → … → 25, sources 0 and 2 under ONE root_id:
+    // node i's single distance is i below 2 and i − 2 from there on, up
+    // to 23 — past a 20-round cap
+    val chain = GraphTables(
+      (0L to 25L).map(i => node(i, s"n$i")).toDS(),
+      (0L until 25L).map(i => EdgeRow(i, i + 1, "HAS_NEXT", "", "b1")).toDS())
+    val seeds = Seq((0L, 0L), (0L, 2L)).toDF("root_id", "node_id")
+    val depths = GraphOps.bfs(chain, seeds)
+      .select("node_id", "depth").as[(Long, Int)].collect().toMap
+    val expected = (0L to 25L)
+      .map(i => i -> (if (i < 2) i else i - 2).toInt).toMap
+    assert(depths == expected)
   }
 }
