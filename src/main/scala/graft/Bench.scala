@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every registered query against
@@ -61,18 +58,6 @@ object Bench {
     // next round decides them from p/pl/byte pins mechanically
     "l2c_prod_knobs", "graphp_cypher_merge_onset",
     "graphp_cypher_shortest_path", "l31_ann_recall")
-
-  private final class ShuffleTally extends SparkListener {
-    val read = new AtomicLong(0L)
-    val write = new AtomicLong(0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
 
   /** Fingerprint of the query's optimized plan, stable across runs and
     * rounds of identical code: canonicalized (exprIds normalized), with

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): isolates one or more
@@ -16,18 +16,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Prof {
 
-  private final class Tally extends SparkListener {
-    val read = new AtomicLong(0L)
-    val write = new AtomicLong(0L)
+  private final class Tally extends ShuffleTally {
     val tasks = new AtomicInteger(0)
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
+      super.onTaskEnd(t)
       tasks.incrementAndGet()
     }
     private val trace = sys.env.contains("SPARK_GRAFT_PROF_JOBS")

@@ -1014,18 +1014,14 @@ object CypherLite {
     * (nulls irrelevant once one is true); NONE: zero true AND zero
     * null; SINGLE: exactly one true AND zero null.
     *
-    * Execution is a per-step frontier expansion. Under `ALL(…)` the
+    * Execution is a [[GraphOps.trails]] enumeration. Under `ALL(…)` the
     * per-edge DNF compiles onto the EDGE RELATION (the expansion only
     * walks passing edges — one sargable scan-side filter, no per-path
     * re-check); under ANY/NONE/SINGLE every type-matched edge is walked
     * carrying two counter columns (true-count, null-count, one add per
     * step) and the quantifier is a counter test at output. The reduce
-    * sum accumulates along the frontier the same way. Each step is one
-    * equi-join keyed on the frontier node id (the samplers' shape);
-    * per-step lazy checkpoints bound plan replay; the visited edge list
-    * per row is bounded by `hi` (the parse caps it), so the
-    * relationship-uniqueness filter is an O(hi) array probe, never a
-    * join.
+    * sum accumulates along the frontier the same way. The parse caps
+    * `hi`, which bounds the enumeration.
     */
   final case class PathQuantReturn(
       pathVar: String,
@@ -6548,10 +6544,7 @@ object CypherLite {
     * only, so Catalyst pushes them below the joins — no hand-scheduling.
     */
   private def runChain(g: GraphTables, ch: ChainReturn): DataFrame = {
-    def pred(n: ChainNode): Column =
-      (n.label.map(col("label") === _).toSeq ++
-        n.props.map { case (k, v) => col(k) === v })
-        .reduceOption(_ && _).getOrElse(lit(true))
+    def pred(n: ChainNode): Column = nodePred(n.label, n.props)
     def relF(r: (Option[String], Int)): Column = relColOf(r._1)
     // step 0 expands from the HEAD pattern; each later step's frontier is
     // the set of nodes the previous step actually reached (∩ that node
@@ -6613,23 +6606,19 @@ object CypherLite {
     // one segment's oriented (from, to) pairs: "in" swaps the scan's
     // columns, "both" (undirected, r14) unions both orientations —
     // projections over the same scan, no extra shuffle
-    def oriented(base: DataFrame, from: String, to: String,
-        dir: String, extra: Seq[Column]): DataFrame = {
-      def sel(s0: Column, d0: Column) =
-        base.select(Seq(s0.as(from), d0.as(to)) ++ extra: _*)
-      dir match {
-        case "in" => sel(col("dst"), col("src"))
-        case "both" => sel(col("src"), col("dst"))
-          .unionByName(sel(col("dst"), col("src")))
-        case _ => sel(col("src"), col("dst"))
-      }
-    }
     def edgePairs(i: Int): DataFrame = {
       val base = g.edges.filter(relF(ch.rels(i)) && relExtra(i)).toDF()
         .withColumn(s"eid$i",
           struct(col("src"), col("dst"), col("relType")))
-      val sel = oriented(base, s"id$i", s"id${i + 1}", dirOfSeg(i),
-        if (eidSegs(i)) Seq(col(s"eid$i")) else Seq.empty)
+      def pairs(s0: Column, d0: Column) =
+        base.select(Seq(s0.as(s"id$i"), d0.as(s"id${i + 1}")) ++
+          (if (eidSegs(i)) Seq(col(s"eid$i")) else Seq.empty): _*)
+      val sel = dirOfSeg(i) match {
+        case "in" => pairs(col("dst"), col("src"))
+        case "both" => pairs(col("src"), col("dst"))
+          .unionByName(pairs(col("dst"), col("src")))
+        case _ => pairs(col("src"), col("dst"))
+      }
       if (eidSegs(i))
         sel.dropDuplicates(s"id$i", s"id${i + 1}", s"eid$i")
       else sel.dropDuplicates(s"id$i", s"id${i + 1}")
@@ -6638,37 +6627,23 @@ object CypherLite {
     // walked edge SET (r14) — used ONLY when the segment's types
     // overlap another segment's (relationship isomorphism needs edge
     // identities across segments; disjoint-type ranged segments keep
-    // the min-depth kernel). One equi-join per step from the incoming
-    // frontier (never the whole graph); within-path edge uniqueness
-    // (Cypher's var-length rule) is the array probe — also what kills
-    // the frontier after one loop on a cycle. No per-step dedup or
-    // array canonicalization: the overlap filters are order-blind and
-    // the binding collapse after them dedups once — extra per-step
-    // shuffles bought nothing (measured 4× on the chain_ranged twin).
-    // Lazy checkpoints only past depth 2, where plan replay would
-    // otherwise compound. Parse caps the range at 8, so the
-    // enumeration is finite even on cycles.
+    // the min-depth kernel). A [[GraphOps.trails]] enumeration from the
+    // incoming frontier (never the whole graph): its visited probe is
+    // Cypher's var-length rule, and also what kills the frontier after
+    // one loop on a cycle. No per-step dedup or array canonicalization:
+    // the overlap filters are order-blind and the binding collapse after
+    // them dedups once — extra per-step shuffles bought nothing
+    // (measured 4× on the chain_ranged twin). Parse caps the range at 8,
+    // so the enumeration is finite even on cycles.
     def rangedEidPairs(i: Int, frontier: DataFrame): DataFrame = {
-      val base = g.edges.filter(relF(ch.rels(i))).toDF()
-        .withColumn("__eid",
-          struct(col("src"), col("dst"), col("relType")))
-      val es = oriented(base, "__from", "__to", dirOfSeg(i),
-        Seq(col("__eid")))
-      var paths = frontier.select(col(s"id$i")).distinct()
-        .join(es, col(s"id$i") === col("__from"))
-        .select(col(s"id$i"), col("__to").as("__cur"),
-          array(col("__eid")).as(s"eids$i"))
-      var out = paths
-      for (step <- 2 to ch.rels(i)._2) {
-        paths = paths.join(es, paths("__cur") === es("__from"))
-          .filter(!array_contains(col(s"eids$i"), col("__eid")))
-          .select(col(s"id$i"), col("__to").as("__cur"),
-            array_append(col(s"eids$i"), col("__eid")).as(s"eids$i"))
-        if (step > 2) paths = paths.localCheckpoint(false)
-        out = out.unionByName(paths)
-      }
-      out.select(col(s"id$i"), col("__cur").as(s"id${i + 1}"),
-        col(s"eids$i"))
+      val start = frontier.select(col(s"id$i")).distinct()
+        .select(col(s"id$i"), col(s"id$i").as("cur"),
+          noEdgesWalked.as("visited"))
+      val edges = orientedEdges(g, dirOfSeg(i)).filter(relF(ch.rels(i)))
+        .select(col("src"), col("dst"), col("eid"))
+      GraphOps.trails(start, edges, 1, ch.rels(i)._2)
+        .select(col(s"id$i"), col("cur").as(s"id${i + 1}"),
+          col("visited").as(s"eids$i"))
     }
     // which colliding segments pair with ranged segment i
     val partnersOf: Map[Int, Seq[Int]] = ch.rels.indices.map(i =>
@@ -7280,19 +7255,12 @@ object CypherLite {
     */
   private def matchedEdgeKeys(g: GraphTables, pat: EdgePat,
       conds: Seq[Seq[Cond]]): DataFrame = {
-    def pred(label: Option[String], props: Map[String, String]): Column =
-      (label.map(col("label") === _).toSeq ++
-        props.map { case (k, v) => col(k) === v })
-        .reduceOption(_ && _).getOrElse(lit(true))
-    val dnf = conds
-      .map(_.map(c => condCol(c, element_at(col("props"), c.prop)))
-        .reduceOption(_ && _).getOrElse(lit(true)))
-      .reduceOption(_ || _).getOrElse(lit(true))
-    val aIds = g.nodes.filter(pred(pat.aLabel, pat.aProps))
+    val aIds = g.nodes.filter(nodePred(pat.aLabel, pat.aProps))
       .select(col("id").as("src"))
-    val bIds = g.nodes.filter(pred(pat.bLabel, pat.bProps))
+    val bIds = g.nodes.filter(nodePred(pat.bLabel, pat.bProps))
       .select(col("id").as("dst"))
-    g.edges.toDF().filter(col("relType") === pat.relType && dnf)
+    g.edges.toDF().filter(col("relType") === pat.relType &&
+        relDnf(conds).getOrElse(lit(true)))
       .select("src", "dst", "relType")
       .join(aIds, Seq("src"), "left_semi")
       .join(bIds, Seq("dst"), "left_semi")
@@ -7307,10 +7275,7 @@ object CypherLite {
     */
   private def runDualMatch(g: GraphTables,
       dm: DualMatchReturn): DataFrame = {
-    def pred(n: ChainNode): Column =
-      (n.label.map(col("label") === _).toSeq ++
-        n.props.map { case (k, v) => col(k) === v })
-        .reduceOption(_ && _).getOrElse(lit(true))
+    def pred(n: ChainNode): Column = nodePred(n.label, n.props)
     def neededProps(i: Int): Seq[String] =
       (dm.items.collect { case (j, p) if j == i => p } ++
         dm.conds.flatten.collect { case (j, c) if j == i => c.prop } ++
@@ -7348,6 +7313,70 @@ object CypherLite {
       }
     val skipped = dm.skip.map(ordered.offset).getOrElse(ordered)
     dm.limit.map(skipped.limit).getOrElse(skipped)
+  }
+
+  /** A node pattern's label and inline-map constraints as one predicate
+    * over the node relation.
+    */
+  private def nodePred(label: Option[String],
+      props: Map[String, String]): Column =
+    (label.map(col("label") === _).toSeq ++
+      props.map { case (k, v) => col(k) === v })
+      .reduceOption(_ && _).getOrElse(lit(true))
+
+  /** A per-edge DNF over relationship properties (`x.prop` conds read
+    * the edge's `props` map); None when there are no conds.
+    */
+  private def relDnf(conds: Seq[Seq[Cond]]): Option[Column] =
+    conds.map(_.map(c => condCol(c, element_at(col("props"), c.prop)))
+        .reduceOption(_ && _).getOrElse(lit(true)))
+      .reduceOption(_ || _)
+
+  /** The empty walked-edge list a trail starts from (element type: the
+    * stored edge identity `eid` of [[orientedEdges]]).
+    */
+  private def noEdgesWalked: Column = array().cast(
+    "array<struct<src:bigint,dst:bigint,relType:string>>")
+
+  /** The nodes(p)/relationships(p) lists a path form carries when the
+    * query projects them: `nds`, the node names in path order (start
+    * included), and `rels`, the relationship types. Without accessors no
+    * column exists, so those plans carry nothing extra.
+    */
+  private final case class PathLists(nodes: Boolean, rels: Boolean) {
+    /** The traversal edges `base` (src, dst, eid, …), plus each edge's
+      * destination `dst_name` when nodes(p) is projected: one edges⋈nodes
+      * join at prep (node ids are unique), paid once before the lazy
+      * checkpoint that every step reads, never per step.
+      */
+    def edges(g: GraphTables, base: DataFrame): DataFrame =
+      (if (nodes) base.join(g.nodes.toDF()
+          .select(col("id").as("dst"), col("name").as("dst_name")), "dst")
+        .select(base.columns.map(col) :+ col("dst_name"): _*)
+      else base).localCheckpoint(false)
+    /** The start columns over a node row: its `name` opens nodes(p). */
+    def start: Seq[Column] =
+      (if (nodes) Seq(array(col("name")).as("nds")) else Seq.empty) ++
+        (if (rels) Seq(array().cast("array<string>").as("rels"))
+         else Seq.empty)
+    /** The per-step appends over a frontier ⋈ [[edges]] row. */
+    def step: Seq[(String, Column)] =
+      (if (nodes) Seq("nds" -> array_append(col("nds"), col("dst_name")))
+       else Seq.empty) ++
+        (if (rels) Seq("rels" ->
+          array_append(col("rels"), col("eid").getField("relType")))
+         else Seq.empty)
+    def names: Seq[String] = step.map(_._1)
+    /** The path-order serialization: comma-joined `path_nodes` and
+      * `path_rels` (the PQNodes/PQRels contract).
+      */
+    def serialize(df: DataFrame): DataFrame = {
+      val withNodes =
+        if (nodes) df.withColumn("path_nodes", array_join(col("nds"), ","))
+        else df
+      if (rels) withNodes.withColumn("path_rels", array_join(col("rels"), ","))
+      else withNodes
+    }
   }
 
   /** The traversal-oriented edge relation of the path forms: "out" = as
@@ -7394,20 +7423,13 @@ object CypherLite {
     */
   private def runShortestPath(g: GraphTables,
       sp: ShortestPathReturn): DataFrame = {
-    def pred(label: Option[String], props: Map[String, String]): Column =
-      (label.map(col("label") === _).toSeq ++
-        props.map { case (k, v) => col(k) === v })
-        .reduceOption(_ && _).getOrElse(lit(true))
-    val roots = g.nodes.filter(pred(sp.aLabel, sp.aProps))
+    val roots = g.nodes.filter(nodePred(sp.aLabel, sp.aProps))
     val seeds = roots.select(col("id").as("root_id"), col("id").as("node_id"))
     // the ALL-on-relationships quantifier pre-filters the edge relation
     // (shortest path in the subgraph of passing edges — one sargable
     // scan-side predicate before the BFS, exactly the ranged-pattern
     // ALL treatment)
-    val rel = sp.allConds
-      .map(_.map(c => condCol(c, element_at(col("props"), c.prop)))
-        .reduceOption(_ && _).getOrElse(lit(true)))
-      .reduceOption(_ || _)
+    val rel = relDnf(sp.allConds)
       .map(dnf => if (sp.quantNone) !dnf else dnf)
       .fold(relColOf(sp.relType))(relColOf(sp.relType) && _)
     def wanted(v: String): Seq[String] = sp.items.collect {
@@ -7433,15 +7455,10 @@ object CypherLite {
     // (every fixture — an accepted pin, see ShortestBfsSpec).
     val withB = if (needNodes || needRels) {
       val k = sp.bound.get
-      val edgesBase = orientedEdges(g, sp.dir).filter(rel)
-        .select(col("src"), col("dst"), col("eid"))
-      val edges = (if (needNodes)
-        edgesBase.join(g.nodes.toDF()
-            .select(col("id").as("dst"), col("name").as("dst_name")),
-          "dst")
-          .select(col("src"), col("dst"), col("eid"), col("dst_name"))
-      else edgesBase).localCheckpoint(false)
-      val bKeep = g.nodes.filter(pred(sp.bLabel, sp.bProps))
+      val lists = PathLists(needNodes, needRels)
+      val edges = lists.edges(g, orientedEdges(g, sp.dir).filter(rel)
+        .select(col("src"), col("dst"), col("eid")))
+      val bKeep = g.nodes.filter(nodePred(sp.bLabel, sp.bProps))
         .select(col("id").as("cur") +:
           bCols.map(p => col(p).as(s"${sp.bVar}_$p")): _*)
       val bSer = bCols.map(p => s"${sp.bVar}_$p")
@@ -7449,50 +7466,18 @@ object CypherLite {
         (if (needNodes) Seq("path_nodes") else Seq.empty) ++
         (if (needRels) Seq("path_rels") else Seq.empty)
       val best = if (sp.allPaths) {
-        // ---- bag form: enumerate, then keep every min-length path
-        var frontier = roots
-          .select(col("id").as("cur"), col("id").as("root_id"),
-            col("name").as("__sn"))
-          .withColumn("path_len", lit(0))
-          .withColumn("visited", array().cast(
-            "array<struct<src:bigint,dst:bigint,relType:string>>"))
-        frontier =
-          if (needNodes)
-            frontier.withColumn("nds", array(col("__sn"))).drop("__sn")
-          else frontier.drop("__sn")
-        if (needRels) frontier = frontier
-          .withColumn("rels", array().cast("array<string>"))
-        var out: Option[DataFrame] = None
-        for (_ <- 1 to k) {
-          frontier = frontier.join(edges, frontier("cur") === edges("src"))
-            .filter(!array_contains(col("visited"), col("eid")))
-            .select(Seq(col("root_id"), edges("dst").as("cur"),
-              (col("path_len") + 1).as("path_len"),
-              array_append(col("visited"), col("eid")).as("visited")) ++
-              (if (needNodes)
-                Seq(array_append(col("nds"), col("dst_name")).as("nds"))
-               else Seq.empty) ++
-              (if (needRels)
-                Seq(array_append(col("rels"),
-                  col("eid").getField("relType")).as("rels"))
-               else Seq.empty): _*)
-            .localCheckpoint(false)
-          out = Some(out.fold(frontier)(_ unionByName frontier))
-        }
-        val candidates = out.get
+        // ---- bag form: enumerate the trails, then keep every
+        // min-length one
+        val start = roots.select(Seq(col("id").as("root_id"),
+          col("id").as("cur"), lit(0).as("path_len"),
+          noEdgesWalked.as("visited")) ++ lists.start: _*)
+        val candidates = GraphOps.trails(start, edges, 1, k,
+            (("path_len" -> (col("path_len") + 1)) +: lists.step).toMap)
           // a root's cycle back to itself is no path (Neo4j's rule —
           // same as the depth kernels' depth > 0 + distinct endpoints)
           .filter(col("cur") =!= col("root_id"))
           .join(bKeep, "cur")
-          .withColumn("path_len", col("path_len").cast("int"))
-        val serialized = {
-          val s1 = if (needNodes) candidates
-            .withColumn("path_nodes", array_join(col("nds"), ","))
-          else candidates
-          if (needRels) s1
-            .withColumn("path_rels", array_join(col("rels"), ","))
-          else s1
-        }
+        val serialized = lists.serialize(candidates)
         val mins = serialized.groupBy("root_id", "cur")
           .agg(min(col("path_len")).as("__min_len"))
         serialized.join(mins, Seq("root_id", "cur"))
@@ -7507,55 +7492,32 @@ object CypherLite {
         // anti-join keeps a node's paths only at its BFS depth, and
         // the per-step argmin keeps exactly one row per (root, node) —
         // frontier size is bounded by |V| per root, never |paths|.
-        val tieArr = (if (needNodes) Seq("nds") else Seq.empty) ++
-          (if (needRels) Seq("rels") else Seq.empty)
-        var frontier = roots
-          .select(col("id").as("cur"), col("id").as("root_id"),
-            col("name").as("__sn"))
-        frontier =
-          if (needNodes)
-            frontier.withColumn("nds", array(col("__sn"))).drop("__sn")
-          else frontier.drop("__sn")
-        if (needRels) frontier = frontier
-          .withColumn("rels", array().cast("array<string>"))
+        var frontier = roots.select(Seq(col("id").as("cur"),
+          col("id").as("root_id")) ++ lists.start: _*)
         var seen = frontier.select("root_id", "cur")
         var out: Option[DataFrame] = None
         for (d <- 1 to k) {
           val stepped = frontier
             .join(edges, frontier("cur") === edges("src"))
             .select(Seq(col("root_id"), edges("dst").as("cur")) ++
-              (if (needNodes)
-                Seq(array_append(col("nds"), col("dst_name")).as("nds"))
-               else Seq.empty) ++
-              (if (needRels)
-                Seq(array_append(col("rels"),
-                  col("eid").getField("relType")).as("rels"))
-               else Seq.empty): _*)
+              lists.step.map { case (name, c) => c.as(name) }: _*)
             // first reach only: a node seen at an earlier depth has a
             // shorter path — drop every longer candidate here, which
             // is also what keeps the frontier from re-walking cycles
             .join(seen, Seq("root_id", "cur"), "left_anti")
           frontier = stepped.groupBy("root_id", "cur")
-            .agg(min(struct(tieArr.map(col): _*)).as("__t"))
+            .agg(min(struct(lists.names.map(col): _*)).as("__t"))
             .select(Seq(col("root_id"), col("cur")) ++
-              tieArr.map(f => col(s"__t.$f").as(f)): _*)
+              lists.names.map(f => col(s"__t.$f").as(f)): _*)
             .localCheckpoint(false)
           val withLen = frontier.withColumn("path_len", lit(d))
           out = Some(out.fold(withLen)(_ unionByName withLen))
           seen = seen.unionByName(frontier.select("root_id", "cur"))
             .localCheckpoint(false)
         }
-        val reached = out.get.join(bKeep, "cur")
-        val serialized = {
-          val s1 = if (needNodes) reached
-            .withColumn("path_nodes", array_join(col("nds"), ","))
-          else reached
-          if (needRels) s1
-            .withColumn("path_rels", array_join(col("rels"), ","))
-          else s1
-        }
-        serialized.select((Seq("root_id", "cur") ++ tieFields ++ bSer)
-          .map(col): _*)
+        lists.serialize(out.get.join(bKeep, "cur"))
+          .select((Seq("root_id", "cur") ++ tieFields ++ bSer)
+            .map(col): _*)
       }
       if (aCols.isEmpty) best
       else best.join(roots.select(col("id").as("root_id") +:
@@ -7569,7 +7531,7 @@ object CypherLite {
         else depths.join(roots.select(col("id").as("root_id") +:
           aCols.map(p => col(p).as(s"${sp.aVar}_$p")): _*), "root_id")
       withA.join(
-        g.nodes.filter(pred(sp.bLabel, sp.bProps))
+        g.nodes.filter(nodePred(sp.bLabel, sp.bProps))
           .select(col("id").as("node_id") +:
             bCols.map(p => col(p).as(s"${sp.bVar}_$p")): _*), "node_id")
         .withColumn("path_len", col("depth").cast("int"))
@@ -7593,28 +7555,17 @@ object CypherLite {
   }
 
   /** Execute a path-quantified ranged pattern ([[PathQuantReturn]]):
-    * frontier expansion over the quantifier-filtered edge relation.
-    * `ALL(…)` holds by construction — the per-edge DNF compiles onto the
-    * EDGE RELATION (one sargable scan-side filter), and the expansion
-    * only ever walks passing edges — so the quantifier costs nothing per
-    * path. Each step is one equi-join keyed on the frontier node id (the
-    * walk/sampler shape: frontier-sized, never graph-squared), the
-    * reduce() sum is one column add per step, and Neo4j's
-    * relationship-uniqueness is an O(hi)-bounded array probe on the
-    * per-row visited list. Per-step LAZY checkpoints bound plan replay
-    * (the output union and the next step both read each step's blocks).
-    * Bag semantics: one output row per qualifying PATH.
+    * one [[GraphOps.trails]] enumeration over the quantifier-filtered
+    * edge relation. `ALL(…)` holds by construction — the per-edge DNF
+    * compiles onto the EDGE RELATION (one sargable scan-side filter), and
+    * the expansion only ever walks passing edges — so the quantifier
+    * costs nothing per path. The reduce() sum and the quantifier counters
+    * are one column add per step. Bag semantics: one output row per
+    * qualifying PATH.
     */
   private def runPathQuant(g: GraphTables, pq: PathQuantReturn)
       : DataFrame = {
-    def pred(label: Option[String], props: Map[String, String]): Column =
-      (label.map(col("label") === _).toSeq ++
-        props.map { case (k, v) => col(k) === v })
-        .reduceOption(_ && _).getOrElse(lit(true))
-    val edgeDnf: Column = pq.allConds
-      .map(_.map(c => condCol(c, element_at(col("props"), c.prop)))
-        .reduceOption(_ && _).getOrElse(lit(true)))
-      .reduceOption(_ || _).getOrElse(lit(true))
+    val edgeDnf = relDnf(pq.allConds).getOrElse(lit(true))
     val reduceProp = pq.items.collectFirst { case PQReduce(p, _) => p }
     // edge-prop string → double through the try_cast lens; a missing or
     // non-numeric value contributes 0 (PQReduce doc)
@@ -7631,9 +7582,9 @@ object CypherLite {
     // nodes(p)/relationships(p) projections accumulate per-path arrays;
     // columns exist only when requested, so plans without them are
     // byte-identical to before
-    val needNodes = pq.items.contains(PQNodes)
-    val needRels = pq.items.contains(PQRels)
-    val edgesBase = orientedEdges(g, pq.dir)
+    val lists = PathLists(pq.items.contains(PQNodes),
+      pq.items.contains(PQRels))
+    val edges = lists.edges(g, orientedEdges(g, pq.dir)
       .filter(if (isAll) relColOf(pq.relType) && edgeDnf
         else relColOf(pq.relType))
       .select(col("src"), col("dst"), col("eid"),
@@ -7641,60 +7592,22 @@ object CypherLite {
         (if (isAll) lit(0)
          else when(edgeDnf, lit(1)).otherwise(lit(0))).as("hit"),
         (if (isAll) lit(0)
-         else when(edgeDnf.isNull, lit(1)).otherwise(lit(0))).as("unk"))
-    val edges = (if (needNodes)
-      // nodes(p) needs each walked edge's DESTINATION name — one
-      // edges⋈nodes hash join at prep (node ids are unique), paid once
-      // before the checkpoint, never per step
-      edgesBase.join(g.nodes.toDF()
-          .select(col("id").as("dst"), col("name").as("dst_name")), "dst")
-        .select(col("src"), col("dst"), col("eid"), col("w"),
-          col("hit"), col("unk"), col("dst_name"))
-    else edgesBase)
-      .localCheckpoint(false) // consumed once per step, hi times
+         else when(edgeDnf.isNull, lit(1)).otherwise(lit(0))).as("unk")))
     def wanted(v: String): Seq[String] =
       pq.items.collect { case PQProp(`v`, p) => p }.distinct
     val aCols = wanted(pq.aVar)
     val bCols = wanted(pq.bVar)
-    val aSide = g.nodes.toDF().filter(pred(pq.aLabel, pq.aProps))
-      .select(col("id").as("cur") +:
-        (aCols.map(p => col(p).as(s"${pq.aVar}_$p")) ++
-          (if (needNodes) Seq(col("name").as("__start_name"))
-           else Seq.empty)): _*)
-    var frontier = aSide
-      .withColumn("path_len", lit(0))
-      .withColumn("total", lit(0.0))
-      .withColumn("hits", lit(0))
-      .withColumn("unks", lit(0))
-      .withColumn("visited", array().cast(
-        "array<struct<src:bigint,dst:bigint,relType:string>>"))
-    if (needNodes) frontier = frontier
-      .withColumn("nds", array(col("__start_name"))).drop("__start_name")
-    if (needRels) frontier = frontier
-      .withColumn("rels", array().cast("array<string>"))
-    var out: Option[DataFrame] = None
-    for (step <- 1 to pq.hi) {
-      frontier = frontier.join(edges, frontier("cur") === edges("src"))
-        .filter(!array_contains(col("visited"), col("eid")))
-        .select((aCols.map(p => col(s"${pq.aVar}_$p")) ++ Seq(
-          edges("dst").as("cur"),
-          (col("path_len") + 1).as("path_len"),
-          (col("total") + col("w")).as("total"),
-          (col("hits") + col("hit")).as("hits"),
-          (col("unks") + col("unk")).as("unks"),
-          array_append(col("visited"), col("eid")).as("visited")) ++
-          (if (needNodes)
-            Seq(array_append(col("nds"), col("dst_name")).as("nds"))
-           else Seq.empty) ++
-          (if (needRels)
-            Seq(array_append(col("rels"),
-              col("eid").getField("relType")).as("rels"))
-           else Seq.empty)): _*)
-        .localCheckpoint(false)
-      if (step >= pq.lo)
-        out = Some(out.fold(frontier)(_ unionByName frontier))
-    }
-    val bSide = g.nodes.toDF().filter(pred(pq.bLabel, pq.bProps))
+    val start = g.nodes.toDF().filter(nodePred(pq.aLabel, pq.aProps))
+      .select(aCols.map(p => col(p).as(s"${pq.aVar}_$p")) ++
+        Seq(col("id").as("cur"), lit(0).as("path_len"),
+          lit(0.0).as("total"), lit(0).as("hits"), lit(0).as("unks"),
+          noEdgesWalked.as("visited")) ++ lists.start: _*)
+    val paths = GraphOps.trails(start, edges, pq.lo, pq.hi, (Seq(
+      "path_len" -> (col("path_len") + 1),
+      "total" -> (col("total") + col("w")),
+      "hits" -> (col("hits") + col("hit")),
+      "unks" -> (col("unks") + col("unk"))) ++ lists.step).toMap)
+    val bSide = g.nodes.toDF().filter(nodePred(pq.bLabel, pq.bProps))
       .select(col("id").as("cur") +:
         bCols.map(p => col(p).as(s"${pq.bVar}_$p")): _*)
     // the quantifier's counter test (TRUE-only survival, Kleene-exact —
@@ -7707,7 +7620,7 @@ object CypherLite {
     }
     // column namespaces can't collide: the parse enforced distinct vars
     // and every projected column is <var>-prefixed
-    val rows = out.get.filter(quantKeep).join(bSide, "cur")
+    val rows = paths.filter(quantKeep).join(bSide, "cur")
     def outName(i: PathQItem): String = i match {
       case PQProp(v, p) => s"${v}_$p"
       case PQLen => "path_len"
@@ -7719,14 +7632,7 @@ object CypherLite {
     val named0 = pq.items.collectFirst {
       case PQReduce(_, a) if a != "total" => a
     }.fold(rows)(a => rows.withColumnRenamed("total", a))
-    // the path-order list serialization (PQNodes/PQRels doc contract)
-    val named1 = if (needNodes)
-      named0.withColumn("path_nodes", array_join(col("nds"), ","))
-    else named0
-    val named = if (needRels)
-      named1.withColumn("path_rels", array_join(col("rels"), ","))
-    else named1
-    val projected = named.withColumn("path_len",
+    val projected = lists.serialize(named0).withColumn("path_len",
       col("path_len").cast("int")).select(outCols.map(col): _*)
     val ordered = pq.orderBy match {
       case Some((k, desc)) =>

@@ -205,6 +205,48 @@ object GraphOps {
       .groupBy("root_id", "node_id").agg(min("depth").as("depth"))
   }
 
+  /** Edge-unique path (trail) enumeration: openCypher's variable-length
+    * rule that no relationship repeats within one path, behind
+    * CypherLite's allShortestPaths path lists, its path-quantified
+    * patterns and its chains' colliding ranged segments. `start` carries
+    * `cur` (where each path ends) and `visited` (the array of walked edge
+    * ids) plus any caller columns; `edges` carries `src`, `dst` and `eid`
+    * plus the caller's per-edge columns, none named like a `start` column.
+    *
+    * Each step joins `cur` = `src`, drops the rows whose `eid` is already
+    * in `visited`, appends `eid`, and replaces each `start` column named
+    * in `step` by its expression over the joined row; the other columns
+    * carry over, in `start`'s order. Returns the union of steps `lo..hi`:
+    * one row per trail (bag semantics). The visited probe is an O(hi)
+    * array scan, never a join; the enumeration is combinatorial, so `hi`
+    * is the only stop.
+    *
+    * Steps past the second are lazy local checkpoints: the next step and
+    * the output union both read them, so they bound plan replay at no job
+    * of their own (the caller's action fills them). Steps 1 and 2 stay
+    * inline, where replay is short and the planner still sees their
+    * partitioning (a colliding `*1..2` chain segment's collapse then
+    * needs no reshuffle of its witness paths).
+    */
+  def trails(start: DataFrame, edges: DataFrame, lo: Int, hi: Int,
+      step: Map[String, Column] = Map.empty): DataFrame = {
+    val next = start.columns.toSeq.map {
+      case "cur" => col("dst").as("cur")
+      case "visited" => array_append(col("visited"), col("eid")).as("visited")
+      case c => step.get(c).fold(col(c))(_.as(c))
+    }
+    var frontier = start
+    var out = Option.empty[DataFrame]
+    for (depth <- 1 to hi) {
+      frontier = frontier.join(edges, col("cur") === col("src"))
+        .filter(!array_contains(col("visited"), col("eid")))
+        .select(next: _*)
+      if (depth > 2) frontier = frontier.localCheckpoint(false)
+      if (depth >= lo) out = Some(out.fold(frontier)(_ unionByName frontier))
+    }
+    out.get
+  }
+
   /** Matched node + its ≤k-hop downward neighborhood as (m, connected) rows
     * (Q4; result contract `first-graph.py:168`).
     */
@@ -288,15 +330,15 @@ object GraphOps {
           .as("connected"))
 
   /** Subtree text aggregation (Q6/A6; `gatherContent`
-    * `new-converter.js:57-85`): descendants' text concatenated in document
-    * order. Order is recovered from the ingest-time `path` column —
-    * `collect_list` alone is shuffle-nondeterministic (SURVEY.md §4.3).
+    * `new-converter.js:57-85`): the text of every descendant, at any
+    * depth, concatenated in document order. Order is recovered from the
+    * ingest-time `path` column — `collect_list` alone is
+    * shuffle-nondeterministic (SURVEY.md §4.3).
     */
-  def subtreeText(g: GraphTables, label: String, name: String,
-      k: Int = Int.MaxValue >> 1): DataFrame = {
+  def subtreeText(g: GraphTables, label: String, name: String): DataFrame = {
     val seeds = matchNodes(g, label, name)
       .select(col("id").as("root_id"), col("id").as("node_id"))
-    val hops = bfs(g, seeds, Some(math.min(k, 32)))
+    val hops = bfs(g, seeds)
     val withText = hops
       .join(g.nodes.select(col("id").as("node_id"), col("content"),
         col("path"), col("docnbr")), "node_id")
@@ -1900,11 +1942,11 @@ object GraphOps {
   def kTruss(spark: SparkSession, g: GraphTables, k: Int,
       maxIterations: Int = 32): DataFrame = {
     require(k >= 3, "k-truss is defined for k >= 3")
-    var und = g.edges.toDF().filter(col("src") =!= col("dst"))
+    var (und, n) = materializeCount(g.edges.toDF()
+      .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("lo"),
         greatest(col("src"), col("dst")).as("hi"))
-      .distinct().localCheckpoint()
-    var n = und.count()
+      .distinct())
     var round = 0
     var done = n == 0L
     while (!done && round < maxIterations) {
@@ -1918,10 +1960,10 @@ object GraphOps {
             greatest(col("b"), col("c")).as("hi")))).as("e"))
         .select(col("e.lo").as("lo"), col("e.hi").as("hi"))
         .groupBy("lo", "hi").agg(count(lit(1)).as("support"))
-      val next = und.join(support, Seq("lo", "hi"), "left_outer")
-        .filter(coalesce(col("support"), lit(0L)) >= k - 2)
-        .select("lo", "hi").localCheckpoint()
-      val m = next.count()
+      val (next, m) = materializeCount(
+        und.join(support, Seq("lo", "hi"), "left_outer")
+          .filter(coalesce(col("support"), lit(0L)) >= k - 2)
+          .select("lo", "hi"))
       done = m == n
       und = next
       n = m

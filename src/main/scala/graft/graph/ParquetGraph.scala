@@ -49,22 +49,23 @@ object ParquetGraph {
       lit(batch).as("batch"),
       typedLit(Map.empty[String, String]).as("props"))
 
-  /** One build per (session, sfDir), cached AND materialized — the eleven
-    * `graphp_*` queries share the in-memory relations instead of each
-    * re-deriving the graph from parquet (same policy as
-    * `GraphQueries.graph` for the XML corpus).
+  /** One build per (session, source, kind), cached AND materialized — the
+    * `graphp_*` queries over an sf directory and the `graph_*` queries
+    * over the XML corpus ([[GraphQueries.graph]]) share the in-memory
+    * relations instead of each re-deriving the graph, and the first timed
+    * query doesn't pay the build.
     */
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), GraphTables]()
 
-  private def cached(s: SparkSession, d: String, kind: String)(
+  private[graph] def cached(s: SparkSession, source: String, kind: String)(
       build: => GraphTables): GraphTables = {
     // evict entries keyed to stopped sessions — their cached blocks died
     // with the context, and the keys would otherwise accumulate forever in
     // a long-lived process that opens/closes sessions
     val it = cache.keySet().iterator()
     while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    cache.computeIfAbsent((s, d, kind), _ => {
+    cache.computeIfAbsent((s, source, kind), _ => {
       val g = build
       val m = GraphTables(g.nodes.cache(), g.edges.cache())
       m.nodes.count()

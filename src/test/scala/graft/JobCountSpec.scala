@@ -68,6 +68,27 @@ class JobCountSpec extends SparkSpec {
     assert(jobs <= 6, s"bounded bfs issued $jobs jobs (budget 6)")
   }
 
+  test("kTruss spends one materializing job per peel round") {
+    // pre-build the cached fixture OUTSIDE the measured group
+    val g = graph.ParquetGraph.cliqueStar(spark, dir)
+    // cliqueStar's 3-truss: round 1 peels every star-only edge, round 2
+    // proves the fixpoint. Each round's triangle enumeration checkpoints
+    // its oriented edges (1 job) and the surviving edges materialize with
+    // their count as the fixpoint probe (1 job); the setup is one
+    // materialize-and-count. Measured (AQE and auto-broadcast off, so
+    // no BroadcastExchange adds a collect job): 5 = 1 + 2 rounds × 2.
+    // The eager-checkpoint-then-count form spent 8; budget 5 fails it.
+    val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (truss, jobs) =
+      try jobsDuring("ktruss-budget") {
+        graph.GraphOps.kTruss(spark, g, 3)
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
+    info(s"kTruss(k = 3): $jobs jobs")
+    assert(truss.count() == 15, "each region keeps its 3-clique's edges")
+    assert(jobs <= 5, s"kTruss issued $jobs jobs (budget 5)")
+  }
+
   test("cheap registered queries execute without stray driver actions") {
     // five cheap queries + w5 (whose size gate must read plan statistics,
     // NOT run an extra count() job per execution)

@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.graft.TestMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -219,16 +220,7 @@ object HubSkewSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val result = action
-      // the listener bus drains asynchronously — poll until quiescent
-      var prev = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 5000) {
-        Thread.sleep(100)
-        waited += 100
-        val cur = listener.snapshot().valuesIterator.map(_.size.toLong).sum
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
+      TestMetrics.drainListenerBus(spark.sparkContext)
       val stages = listener.snapshot()
         .map { case (id, tasks) =>
           StageBalance(id, tasks.filter(_ > 0L).sorted)

@@ -128,4 +128,20 @@ class ShortestBfsSpec extends SparkSpec {
       .map(i => i -> (if (i < 2) i else i - 2).toInt).toMap
     assert(depths == expected)
   }
+
+  test("subtreeText returns every descendant's text below a 40-level " +
+      "chain: no hop cap truncates the subtree") {
+    import spark.implicits._
+    // root → c1 → … → c40 along HAS_CHILD; each node's ingest path is as
+    // long as its depth, so document order is depth order
+    val deep = GraphTables(
+      (0 to 40).map(i => NodeRow(i.toLong, if (i == 0) "Root" else "N",
+        s"c$i", if (i == 0) "" else s"t$i", "d1", "b1", Seq.fill(i)(0)))
+        .toDS(),
+      (0 until 40).map(i => EdgeRow(i.toLong, i + 1L, "HAS_CHILD", "d1",
+        "b1")).toDS())
+    val text = GraphOps.subtreeText(deep, "Root", "c0")
+      .select("subtree_text").as[String].collect().toSeq
+    assert(text == Seq((1 to 40).map(i => s"t$i").mkString(" ")))
+  }
 }

@@ -1,11 +1,9 @@
 package org.apache.spark.graft
 
-import java.util.concurrent.atomic.AtomicLong
-
+import _root_.graft.ShuffleTally
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Test-only shuffle-byte tally for the scale-curve pins (round-13
+/** Test-only listener helpers for the scale-curve pins (round-13
   * directive 1): wall-clock ratios drift with machine load, but the bytes
   * a plan shuffles are a property of the PLAN and the DATA — a quadratic
   * term shows up as ~100× the bytes at a 10× input whatever the CPU
@@ -16,17 +14,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   */
 object TestMetrics {
 
-  private final class ShuffleTally extends SparkListener {
-    val read = new AtomicLong(0L)
-    val write = new AtomicLong(0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
+  /** Block until every event posted so far has reached every listener. */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Total shuffle (read, write) bytes across every task `body` runs.
     * The listener bus is drained before reading the tally, so the counts
@@ -37,7 +27,7 @@ object TestMetrics {
     sc.addSparkListener(tally)
     try {
       body
-      sc.listenerBus.waitUntilEmpty()
+      drainListenerBus(sc)
     } finally sc.removeSparkListener(tally)
     (tally.read.get(), tally.write.get())
   }
